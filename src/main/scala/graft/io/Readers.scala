@@ -38,12 +38,6 @@ object Readers {
       .withColumn("jname",
         regexp_extract(url_decode(input_file_name()), JnamePattern, 0))
 
-  /** S4: typed CSV scan — schema is the column pruning + casts the reference
-    * does by hand (/root/reference/activity_categorize.py:50-66). */
-  def loadCsv(spark: SparkSession, path: String,
-              schema: org.apache.spark.sql.types.StructType): DataFrame =
-    spark.read.schema(schema).option("header", "true").csv(path)
-
   /** Schema-evolution parquet read: merges the footers of files written
     * with drifting schemas (a column added mid-stream by an upstream
     * producer) into one superset schema, null-backfilling older files.

@@ -713,14 +713,6 @@ object Multimodal {
       }
   }
 
-  /** Audio near-dup pairs over [[audioDhash56]] via the shared banded
-    * Hamming join; same tuning-vs-scale split as [[imageNearDup]] /
-    * [[audioDupGroups]]. */
-  def audioNearDup(assets: DataFrame, maxHamming: Int = 3,
-                   payloadCol: String = "payload"): DataFrame =
-    graft.dedup.Dedup.hammingCandidates(audioDhash(assets, payloadCol),
-      maxHamming, fpBits = 56)
-
   /** Per-FRAME [[dhash56]] fingerprints of every video asset:
     * (id, frame, fp) — the content-ID primitive. ONE sequential
     * container walk per video map-side (length-indexed reads, no

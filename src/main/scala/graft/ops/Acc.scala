@@ -277,10 +277,14 @@ object Acc {
   /** A2: resting band = exact (2.5 %, 97.5 %) quantiles of g-force within
     * sleep intervals (`sleep_acc_thresh`,
     * /root/reference/activity_categorize.py:151-162). Exact `percentile`
-    * for oracle parity; `percentile_approx` is the documented 100 TB path. */
+    * for oracle parity; `percentile_approx` is the documented 100 TB path.
+    * With `partitionCols` each group's samples count only inside that
+    * group's own sleep intervals; the band is pooled over all groups. */
   def restingBand(acc: DataFrame, sleepIntervals: DataFrame,
-                  exact: Boolean = true): (Double, Double) = {
-    val inSleep = Filters.pointInInterval(acc, sleepIntervals, "date_time")
+                  exact: Boolean = true,
+                  partitionCols: Seq[String] = Nil): (Double, Double) = {
+    val inSleep = Filters.pointInInterval(acc, sleepIntervals, "date_time",
+      partitionCols)
     val agg = if (exact)
       inSleep.select(expr("percentile(g_force, array(0.025, 0.975))"))
     else
@@ -291,11 +295,6 @@ object Acc {
     (r(0), r(1))
   }
 
-  /** A3+A4: tumbling-bin categorize — % of samples outside [lo, hi];
-    * > 10 % high active, > 5 % low active, else rest
-    * (`acc_categorize`/`bin_categorize`,
-    * /root/reference/activity_categorize.py:164-192). Map-side partial agg;
-    * one shuffle on (partitionCols, window). */
   /** A4 building blocks, shared by the batch and streaming categorizers
     * (`bin_categorize`, /root/reference/activity_categorize.py:184-192). */
   def outlierFlag(value: org.apache.spark.sql.Column, lo: Double,
@@ -307,6 +306,11 @@ object Acc {
       .when(outlierPct > 5, "low active")
       .otherwise("rest")
 
+  /** A3+A4: tumbling-bin categorize — % of samples outside [lo, hi];
+    * > 10 % high active, > 5 % low active, else rest
+    * (`acc_categorize`/`bin_categorize`,
+    * /root/reference/activity_categorize.py:164-192). Map-side partial agg;
+    * one shuffle on (partitionCols, window). */
   def binCategorize(acc: DataFrame, lo: Double, hi: Double,
                     partitionCols: Seq[String] = Nil,
                     binSizeMinutes: Int = 5,

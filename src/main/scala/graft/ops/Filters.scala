@@ -71,13 +71,24 @@ object Filters {
     * inside any interval (`df_filter`, /root/reference/filtering_data.py:114-124;
     * boundaries inclusive both ends, quirk Q9). The interval side is tiny →
     * broadcast; Spark plans BroadcastNestedLoopJoin for the non-equi
-    * condition. */
+    * condition. With `partitionCols` (e.g. a subject key) a fact row only
+    * matches its own group's intervals: the join becomes a null-safe
+    * equi-join on those columns plus the range condition, which Spark
+    * plans as a BroadcastHashJoin. */
   def pointInInterval(fact: DataFrame, intervals: DataFrame,
-                      tsCol: String = "date_time"): DataFrame =
-    fact.join(broadcast(intervals),
-      fact(tsCol) >= intervals("start_time") &&
-        fact(tsCol) <= intervals("end_time"),
+                      tsCol: String = "date_time",
+                      partitionCols: Seq[String] = Nil): DataFrame = {
+    // renamed so the key columns of an interval side derived from `fact`
+    // stay distinct from the fact's own
+    val iv = if (partitionCols.isEmpty) intervals
+      else intervals.select(partitionCols.map(c => col(c).as(s"_pii_$c")) :+
+        col("start_time") :+ col("end_time"): _*)
+    val sameKey = partitionCols.map(c => fact(c) <=> iv(s"_pii_$c"))
+    fact.join(broadcast(iv),
+      (sameKey :+ (fact(tsCol) >= iv("start_time")) :+
+        (fact(tsCol) <= iv("end_time"))).reduce(_ && _),
       "left_semi")
+  }
 
   /** J1 at scale: binned point-in-interval semi-join. Same semantics as
     * [[pointInInterval]] (boundaries inclusive both ends) but the join is

@@ -30,7 +30,21 @@ object Intervals {
     * Both inputs: (partitionCols..., start_time, end_time).
     */
   def subtractIntervals(base: DataFrame, sub: DataFrame,
-                        partitionCols: Seq[String] = Nil): DataFrame = {
+                        partitionCols: Seq[String] = Nil): DataFrame =
+    sweep(base, sub, partitionCols, _ === 0)
+
+  /** Interval intersection base ∩ sub via the same sweep (engine extension —
+    * the reference composes it from two subtracts). */
+  def intersectIntervals(base: DataFrame, sub: DataFrame,
+                         partitionCols: Seq[String] = Nil): DataFrame =
+    sweep(base, sub, partitionCols, _ > 0)
+
+  /** The boundary-event sweep shared by [[subtractIntervals]] and
+    * [[intersectIntervals]]: keeps the segments base covers whose sub
+    * coverage satisfies `keepSub`, merged. */
+  private def sweep(base: DataFrame, sub: DataFrame,
+                    partitionCols: Seq[String],
+                    keepSub: Column => Column): DataFrame = {
     val part = partitionCols.map(col)
     def events(df: DataFrame, baseDelta: Int, subDelta: Int): DataFrame =
       df.select(part :+ col("start_time").as("t") :+
@@ -52,42 +66,16 @@ object Intervals {
       .withColumn("base_cov", sum(col("bd")).over(run))
       .withColumn("sub_cov", sum(col("sd")).over(run))
       .withColumn("next_t", lead(col("t"), 1).over(ord))
-      // segment (t, next_t) is kept iff base covers it and sub does not
+      // segment (t, next_t) is kept iff base covers it and sub's
+      // coverage passes keepSub
       .filter(col("next_t").isNotNull &&
-        col("base_cov") > 0 && col("sub_cov") === 0 &&
+        col("base_cov") > 0 && keepSub(col("sub_cov")) &&
         col("t") < col("next_t"))
       .select(part :+ col("t").as("start_time") :+
         col("next_t").as("end_time"): _*)
 
     // adjacent kept segments share boundary points (splits introduced by
     // irrelevant endpoints) → merge them back; also dedups overlapping base
-    Windows.mergeIntervals(segments, partitionCols)
-  }
-
-  /** Interval intersection base ∩ sub via the same sweep (engine extension —
-    * the reference composes it from two subtracts). */
-  def intersectIntervals(base: DataFrame, sub: DataFrame,
-                         partitionCols: Seq[String] = Nil): DataFrame = {
-    val part = partitionCols.map(col)
-    def events(df: DataFrame, b: Int, s: Int): DataFrame =
-      df.select(part :+ col("start_time").as("t") :+
-          lit(b).as("bd") :+ lit(s).as("sd"): _*)
-        .unionAll(df.select(part :+ col("end_time").as("t") :+
-          lit(-b).as("bd") :+ lit(-s).as("sd"): _*))
-    val all = events(base, 1, 0).unionAll(events(sub, 0, 1))
-      .groupBy(part :+ col("t"): _*)
-      .agg(sum("bd").as("bd"), sum("sd").as("sd"))
-    val ord = Window.partitionBy(part: _*).orderBy(col("t"))
-    val run = ord.rowsBetween(Window.unboundedPreceding, 0)
-    val segments = all
-      .withColumn("base_cov", sum(col("bd")).over(run))
-      .withColumn("sub_cov", sum(col("sd")).over(run))
-      .withColumn("next_t", lead(col("t"), 1).over(ord))
-      .filter(col("next_t").isNotNull &&
-        col("base_cov") > 0 && col("sub_cov") > 0 &&
-        col("t") < col("next_t"))
-      .select(part :+ col("t").as("start_time") :+
-        col("next_t").as("end_time"): _*)
     Windows.mergeIntervals(segments, partitionCols)
   }
 }

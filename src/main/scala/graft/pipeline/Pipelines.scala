@@ -59,7 +59,8 @@ object Pipelines {
       .filter(col("include"))
       .select((partitionCols.map(col) :+ col("start_time") :+
         col("end_time")): _*)
-    val kept = Filters.pointInInterval(measurements, include, "date_time")
+    val kept = Filters.pointInInterval(measurements, include, "date_time",
+      partitionCols)
     Filters.clampKinds(kept, ranges)
   }
 
@@ -132,7 +133,8 @@ object Pipelines {
                      mode: CompatMode = CompatMode.Intended): CategorizeOut = {
     val part = partitionCols.map(col)
     val sleep = sleepIntervals(measurements, partitionCols, mode)
-    val (lo, hi) = Acc.restingBand(accWide, sleep)
+    val (lo, hi) = Acc.restingBand(accWide, sleep,
+      partitionCols = partitionCols)
     val cat = Windows.mergeAdjacentWindows(
       Acc.binCategorize(accWide, lo, hi, partitionCols)
         .select((part :+ col("start_time") :+ col("end_time") :+
@@ -142,59 +144,6 @@ object Pipelines {
       timelineFromCategorized(sleep, cat, partitionCols))
   }
 
-  def categorize(measurements: DataFrame, accWide: DataFrame,
-                 partitionCols: Seq[String] = Nil,
-                 mode: CompatMode = CompatMode.Intended):
-      (Double, Double, DataFrame) = {
-    val out = categorizeFull(measurements, accWide, partitionCols, mode)
-    (out.lo, out.hi, out.timeline)
-  }
-
-  /** E4 (engine extension — no reference analogue): the standard
-    * LLM-training-data curation sweep over a document corpus, composed
-    * from the dedup/text operators:
-    *
-    *  1. gate       — non-null text, quality ≥ `minQuality`, language "en"
-    *                  (map-only column expressions); optionally a
-    *                  byte-level repetition floor: drop docs whose
-    *                  deflate ratio falls below `minCompressionRatio`
-    *                  (looping spam compresses to almost nothing while
-    *                  passing character-class quality); with
-    *                  `blockWords` drop docs whose unsafe-word fraction
-    *                  exceeds `maxBlocklistFraction` (q149's gate); with
-    *                  `allowLicenses` keep only docs whose detected
-    *                  license class is allowed (q150's tagger); with
-    *                  `dropDamaged` drop docs carrying U+FFFD
-    *                  replacement chars or stray C0 controls (q157's
-    *                  encoding-damage gate — runs first among the
-    *                  optional predicates since transcoding damage
-    *                  poisons every downstream text rule)
-    *  2. exact      — one survivor per normalized fingerprint
-    *  3. near-dup   — [[graft.dedup.Dedup.nearDupClusters]] (LSH
-    *                  candidates → exact verify → components), keep each
-    *                  component's representative; with `maxPerDomain`
-    *                  then a FineWeb-style per-registrable-domain cap
-    *                  over `urlCol` ([[graft.text.UrlOps.capPerDomain]]);
-    *                  with `tokenBudget` then best-quality-first
-    *                  selection until the budget fills
-    *                  ([[graft.text.TextOps.selectUnderTokenBudget]])
-    *  4. split      — deterministic md5 train/val/test
-    *  5. decontam   — drop training docs sharing any word
-    *                  `decontamN`-gram with the held-out test split;
-    *                  with `fuzzyDecontaminate` ALSO drop training docs
-    *                  that are MinHash near-dups (exact-verified Jaccard
-    *                  ≥ `fuzzyMinJaccard`) of any test doc — the
-    *                  paraphrase-tolerant pass exact n-grams miss
-    *
-    * Returns the curated corpus with the `split` column. Every stage's
-    * shuffle posture is the operator's own (see SURVEY.md §9); the gate
-    * runs first so all downstream shuffles move only surviving docs. */
-  /** WARC → documents-shaped ingest: crawl records become (doc_id, text,
-    * lang, source, n_chars) rows ready for [[curate]]. `conversion`
-    * records (Common Crawl's pre-extracted text) pass through bare;
-    * `response` records get the HTTP envelope stripped. doc_id is the
-    * xxhash64 of the WARC record id (stable across re-reads), source is
-    * the target host, lang the engine's heuristic — all map-only. */
   /** Shape charset-DECODED WARC records ([[graft.io.Warc
     * .recordsDecoded]] output) into the documents contract — shared by
     * the batch [[ingestWarc]] (`decodeCharset = true`) and the
@@ -228,6 +177,12 @@ object Pipelines {
         "decode_ok")
   }
 
+  /** WARC → documents-shaped ingest: crawl records become (doc_id, text,
+    * lang, source, n_chars) rows ready for [[curate]]. `conversion`
+    * records (Common Crawl's pre-extracted text) pass through bare;
+    * `response` records get the HTTP envelope stripped. doc_id is the
+    * xxhash64 of the WARC record id (stable across re-reads), source is
+    * the target host, lang the engine's heuristic — all map-only. */
   def ingestWarc(spark: SparkSession, path: String,
                  types: Seq[String] = Seq("conversion", "response"),
                  extractHtml: Boolean = false,
@@ -310,6 +265,45 @@ object Pipelines {
       .select("doc_id", "text", "lang", "source", "n_chars")
   }
 
+  /** E4 (engine extension — no reference analogue): the standard
+    * LLM-training-data curation sweep over a document corpus, composed
+    * from the dedup/text operators:
+    *
+    *  1. gate       — non-null text, quality ≥ `minQuality`, language "en"
+    *                  (map-only column expressions); optionally a
+    *                  byte-level repetition floor: drop docs whose
+    *                  deflate ratio falls below `minCompressionRatio`
+    *                  (looping spam compresses to almost nothing while
+    *                  passing character-class quality); with
+    *                  `blockWords` drop docs whose unsafe-word fraction
+    *                  exceeds `maxBlocklistFraction` (q149's gate); with
+    *                  `allowLicenses` keep only docs whose detected
+    *                  license class is allowed (q150's tagger); with
+    *                  `dropDamaged` drop docs carrying U+FFFD
+    *                  replacement chars or stray C0 controls (q157's
+    *                  encoding-damage gate — runs first among the
+    *                  optional predicates since transcoding damage
+    *                  poisons every downstream text rule)
+    *  2. exact      — one survivor per normalized fingerprint
+    *  3. near-dup   — [[graft.dedup.Dedup.nearDupClusters]] (LSH
+    *                  candidates → exact verify → components), keep each
+    *                  component's representative; with `maxPerDomain`
+    *                  then a FineWeb-style per-registrable-domain cap
+    *                  over `urlCol` ([[graft.text.UrlOps.capPerDomain]]);
+    *                  with `tokenBudget` then best-quality-first
+    *                  selection until the budget fills
+    *                  ([[graft.text.TextOps.selectUnderTokenBudget]])
+    *  4. split      — deterministic md5 train/val/test
+    *  5. decontam   — drop training docs sharing any word
+    *                  `decontamN`-gram with the held-out test split;
+    *                  with `fuzzyDecontaminate` ALSO drop training docs
+    *                  that are MinHash near-dups (exact-verified Jaccard
+    *                  ≥ `fuzzyMinJaccard`) of any test doc — the
+    *                  paraphrase-tolerant pass exact n-grams miss
+    *
+    * Returns the curated corpus with the `split` column. Every stage's
+    * shuffle posture is the operator's own (see SURVEY.md §9); the gate
+    * runs first so all downstream shuffles move only surviving docs. */
   def curate(docs0: DataFrame, minQuality: Double = 0.3,
              minJaccard: Double = 0.8, decontamN: Int = 8,
              adaptivePct: Option[Double] = None,
@@ -867,8 +861,9 @@ object Pipelines {
     * putting two shards in one file changes nothing for the reader).
     * Curation knobs beyond `minQuality` are deliberately not threaded —
     * callers with a tuned curation pass the CURATED frame and set
-    * `minQuality = 0` ([[curate]] is idempotent on its own output). */
-  /** @param tokenizerPath optional shipped tokenizer file (any format
+    * `minQuality = 0` ([[curate]] is idempotent on its own output).
+    *
+    * @param tokenizerPath optional shipped tokenizer file (any format
     *                       [[graft.text.TokenizerFiles.loadTokenizer]]
     *                       reads) — packs then fill by the REAL token
     *                       count instead of the whitespace proxy. */
@@ -955,27 +950,6 @@ object Pipelines {
         col("crawl_delay_s"), col("earliest_fetch_s"))
   }
 
-  /** E10's DISCOVERY leg — the nested-sitemap fetch list
-    * [[frontierPlan]] deliberately keeps out of the page fetch plan:
-    * sitemapINDEX documents (the NORM for real hosts — one index
-    * pointing at date- or section-sharded child sitemaps) enumerate
-    * further sitemaps, and those URLs must go back to the sitemap
-    * fetcher or an index-rooted host discovers nothing. One row per
-    * undiscovered child sitemap: (host, url, lastmod — the max
-    * declared freshness hint when several indexes list the same
-    * child, empty when none declares one).
-    *
-    * `fetched` is the set of sitemap URLs already retrieved (the
-    * caller's sitemap ledger) — anti-joined away so each round only
-    * fetches new children. The crawl loop is the caller's:
-    * round N's index docs → this list → fetch → round N+1's docs →
-    * re-plan; a bounded loop over this method IS the bounded-depth
-    * recursion (each round is one hop down the index tree, and real
-    * trees are 1-2 hops deep).
-    *
-    * Scale shape: map-side parse, one |children|-row groupBy (child
-    * sitemap counts are host-scale, orders below page counts), one
-    * anti-join on url. Page payloads never enter. */
   /** E10 → E6 bridge: scope an archive FETCH PLAN to the frontier —
     * the step that closes the discovery loop when the corpus already
     * holds captures (Common-Crawl-style reuse: fetch from the archive,
@@ -1013,6 +987,27 @@ object Pipelines {
           .as("url"))
       .distinct()
 
+  /** E10's DISCOVERY leg — the nested-sitemap fetch list
+    * [[frontierPlan]] deliberately keeps out of the page fetch plan:
+    * sitemapINDEX documents (the NORM for real hosts — one index
+    * pointing at date- or section-sharded child sitemaps) enumerate
+    * further sitemaps, and those URLs must go back to the sitemap
+    * fetcher or an index-rooted host discovers nothing. One row per
+    * undiscovered child sitemap: (host, url, lastmod — the max
+    * declared freshness hint when several indexes list the same
+    * child, empty when none declares one).
+    *
+    * `fetched` is the set of sitemap URLs already retrieved (the
+    * caller's sitemap ledger) — anti-joined away so each round only
+    * fetches new children. The crawl loop is the caller's:
+    * round N's index docs → this list → fetch → round N+1's docs →
+    * re-plan; a bounded loop over this method IS the bounded-depth
+    * recursion (each round is one hop down the index tree, and real
+    * trees are 1-2 hops deep).
+    *
+    * Scale shape: map-side parse, one |children|-row groupBy (child
+    * sitemap counts are host-scale, orders below page counts), one
+    * anti-join on url. Page payloads never enter. */
   def sitemapFrontier(sitemaps: DataFrame, fetched: DataFrame,
                       xmlCol: String = "xml",
                       fetchedUrlCol: String = "url"): DataFrame =

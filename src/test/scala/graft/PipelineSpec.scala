@@ -84,6 +84,29 @@ class PipelineSpec extends SparkSpec {
     assert(filtered.filter($"kind" === "step").count() == 0)
   }
 
+  test("E2 filter batched by subject equals one run per subject") {
+    // two subjects share the date; only s1 has a >20-sample hr flatline,
+    // so s2's kept intervals cover s1's flatline minutes
+    val m = (for {
+      subj <- Seq("s1", "s2"); i <- 0 until 55; kind <- Seq("hr", "spo2")
+    } yield {
+      val v = if (kind == "spo2") 95.0
+        else if (subj == "s1" && i < 25) 70.0 else 60.0 + (i % 13)
+      (subj, new java.sql.Timestamp(Day + i * 60000L), kind, v)
+    }).toDF("subject", "date_time", "kind", "data")
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.select("subject", "date_time", "kind", "data").collect()
+        .map(_.toString).sorted.toSeq
+    val single = rows(Seq("s1", "s2")
+      .map(s => Pipelines.filterNoise(m.filter($"subject" === s)))
+      .reduce(_ unionByName _))
+    // s1 keeps only the 30 minutes after its flatline, both kinds
+    assert(single.count(_.startsWith("[s1,")) == 60)
+    assert(single.count(_.startsWith("[s2,")) == 110)
+    assert(rows(Pipelines.filterNoise(m, partitionCols = Seq("subject"))) ==
+      single)
+  }
+
   test("E3 categorize: sleep/rest/active timeline tiles without overlap") {
     val dir = writeFixture()
     val m = Pipelines.reformat(spark, dir.toString).measurements
@@ -95,7 +118,8 @@ class PipelineSpec extends SparkSpec {
     }.toDF("date_time", "acx", "acy", "acz", "g_force")
       .withColumn("seconds", graft.ops.TimeOps.secondsOfDay($"date_time"))
       .withColumn("bin", graft.ops.TimeOps.secondsBin($"seconds"))
-    val (lo, hi, timeline) = Pipelines.categorize(m, acc)
+    val out = Pipelines.categorizeFull(m, acc)
+    val (lo, hi, timeline) = (out.lo, out.hi, out.timeline)
     assert(lo <= hi)
     val cats = timeline.select("category").distinct().as[String]
       .collect().toSet
@@ -114,8 +138,8 @@ class PipelineSpec extends SparkSpec {
     // assumptions (time-ordered, well-formed pairs, 5-minute bins), which
     // is exactly when the quirks are invisible. The dial only diverges on
     // inputs that violate those assumptions (OpsSpec matrix covers that).
-    val (_, _, faithful) = Pipelines.categorize(m, acc,
-      mode = graft.ops.CompatMode.Faithful)
+    val faithful = Pipelines.categorizeFull(m, acc,
+      mode = graft.ops.CompatMode.Faithful).timeline
     val a = timeline.select("category", "start_time", "end_time").collect()
       .map(_.toString).sorted.toSeq
     val b = faithful.select("category", "start_time", "end_time").collect()
